@@ -491,12 +491,7 @@ def cmd_bench_convert(args) -> int:
     """B2 (bench.cpp:83-227): pre-generate -> timed convert -> rates."""
     from pyspark.sql import functions as F
 
-    from bolson_spark.operators import (
-        add_seq,
-        parse_json,
-        parse_json_arrow,
-        serialize_ipc,
-    )
+    from bolson_spark.operators import convert
     from bolson_spark.session import get_spark
 
     spark = get_spark("bolson-bench-convert")
@@ -508,34 +503,25 @@ def cmd_bench_convert(args) -> int:
         [(i, d) for i, d in enumerate(docs)], ["arrival", "value"]
     ).repartition(args.partitions).cache()
     df.count()  # materialize input outside the timed region (FillBuffers)
-    parse_fn = parse_json if args.parser == "catalyst" else parse_json_arrow
     best = None
     for _ in range(args.repeats):
         t0 = time.perf_counter()
-        parsed = parse_fn(df, _schema(args.schema), "value", keep=["arrival"])
-        if args.seq_mode == "scalable":
-            # add_seq_scalable's offset pass is a second action over the
-            # parsed input; cache so parse runs once inside the timed
-            # region (still end-to-end honest: parse + cache + number).
-            from bolson_spark.operators import add_seq_scalable
-
-            parsed = parsed.cache()
-            seqd = add_seq_scalable(parsed, "arrival").drop("arrival")
-        else:
-            seqd = add_seq(parsed, "arrival").drop("arrival")
-        ser = serialize_ipc(
-            seqd.repartitionByRange(args.partitions, F.col("bolson_seq"))
-            .sortWithinPartitions("bolson_seq"),
+        ser = convert(
+            df,
+            _schema(args.schema),
+            "value",
+            "arrival",
             max_rows=args.max_rows,
             max_ipc_size=args.max_ipc,
+            serialize=True,
+            seq_mode=args.seq_mode,
+            parser=args.parser,
         )
         stats = ser.select(
             F.count(F.lit(1)).alias("n"), F.sum("ipc_bytes").alias("b")
         ).first()
         dt = time.perf_counter() - t0
         best = dt if best is None else min(best, dt)
-        if args.seq_mode == "scalable":
-            parsed.unpersist()
     print(
         json.dumps(
             {

@@ -61,7 +61,8 @@ def parse_json_arrow(
     Scale shape: narrow map, zero shuffle; Arrow batches stream through
     the Python worker without a pandas detour. Per-batch the documents
     are newline-joined (the source is line-framed JSON — stream.cpp) and
-    handed to the C++ reader in one call.
+    handed to the C++ reader in one call. A NULL, empty or blank
+    document raises, whatever ``strict`` says.
     """
     import pyarrow as pa
     import pyarrow.json as pajson
@@ -134,6 +135,8 @@ def parse_json(
     strict=True reproduces the reference's UnexpectedFieldBehavior::Error:
     any row with an out-of-schema top-level key raises at execution time
     via the built-in ``raise_error`` expression (no Python, no collect).
+    A NULL, empty or blank document raises too, as in the Arrow twin
+    (with strict=False it yields a row of NULL fields).
     ``keep`` lists pass-through columns to retain next to the parsed
     fields (e.g. the arrival key used for sequence numbers).
     """
@@ -154,20 +157,20 @@ def parse_json(
         guard = F.when(
             # from_json's FAILFAST quirk: an empty/whitespace (or
             # JSON-literal-null) document is not "malformed" to it —
-            # it silently yields a NULL struct instead of raising. The
-            # reference's reader errors on such documents (Arrow
-            # "Empty JSON file"), and the Arrow twin enforces the same
-            # via its batch row-count check, so the catalyst path must
-            # raise too or the two "tested equal" parsers diverge.
-            # Detected via the parse RESULT being null on a non-null
-            # input — not a trim() scan, which would re-walk every
-            # document string just to find the rare blank one.
-            p.isNull() & F.col("_src").isNotNull(),
+            # it silently yields a NULL struct instead of raising, and
+            # a NULL document yields NULL too. The reference's reader
+            # errors on such documents (Arrow "Empty JSON file"), and
+            # the Arrow twin rejects them (null check + batch row-count
+            # check), so the catalyst path must raise too or the two
+            # "tested equal" parsers diverge. Detected via the parse
+            # RESULT being null — not a trim() scan, which would
+            # re-walk every document string to find the rare blank one.
+            p.isNull(),
             F.raise_error(
                 F.lit(
-                    "bolson_spark: empty/blank JSON document — the "
-                    "strict parse contract rejects documents that are "
-                    "not a JSON object"
+                    "bolson_spark: null, empty or blank JSON document — "
+                    "the strict parse contract rejects documents that "
+                    "are not a JSON object"
                 )
             ),
         ).when(

@@ -9,10 +9,13 @@ order. Default max_rows = 1024 (cli.cpp:37-39).
 Spark-first mapping: with contiguous 0-based ``bolson_seq``, the slice
 assignment is pure arithmetic — ``batch_id = floor((seq - base) /
 max_rows)`` — which Catalyst evaluates inside whole-stage codegen with
-no shuffle at all. The *physical* zero-copy slicing happens at
-serialization time (serialize.py) on Arrow batches; this module supplies
-the logical grouping and the per-slice seq-range stats that the
-reference's Resizer recomputes (resizer.cpp:27-42).
+no shuffle at all. The seq operators already leave each partition
+holding contiguous seq runs, so ``rebatch`` only sorts within
+partitions: it adds no exchange. The *physical* zero-copy slicing
+happens at serialization time (serialize.py) on Arrow batches, cut at
+``max_rows`` and at every seq break; this module supplies the logical
+grouping and the per-slice seq-range stats that the reference's
+Resizer recomputes (resizer.cpp:27-42).
 """
 
 from __future__ import annotations
@@ -42,14 +45,19 @@ def rebatch(
     seq_col: str = SEQ_COL,
     base: int = 0,
 ) -> DataFrame:
-    """Physically co-locate and order rows of each output batch.
+    """Tag each row with its output batch and order every partition by
+    seq, without an exchange (the Resizer slices a batch that is already
+    in order, resizer.cpp:21-50).
 
-    ``repartitionByRange`` on the seq column keeps batches contiguous in
-    partitions (ranges of seq map to ranges of batch_id), and the
-    intra-partition sort makes downstream Arrow slicing deterministic.
+    Precondition: the rows of each partition of ``df``, sorted by seq,
+    form few contiguous seq runs. Both seq operators give that:
+    ``add_seq`` emits one partition holding one run, and
+    ``add_seq_scalable`` one partition per literal bucket, each one
+    run. Output is correct for ANY input — ``serialize_ipc`` cuts
+    messages at every seq break — so the precondition only decides how
+    full the messages are: each run adds at most one partial message.
     """
-    out = add_batch_id(df, max_rows, seq_col, base)
-    return out.repartitionByRange(F.col(seq_col)).sortWithinPartitions(seq_col)
+    return add_batch_id(df, max_rows, seq_col, base).sortWithinPartitions(seq_col)
 
 
 def batch_stats(

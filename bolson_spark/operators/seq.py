@@ -93,8 +93,10 @@ def add_seq_scalable(
 
     2. exact per-bucket counts (key-only scan) -> exclusive prefix
        sums on the driver, O(buckets) data.
-    3. the single full-width pass: shuffle by the literal bucket id,
-       intra-bucket ``row_number`` + bucket base.
+    3. the single full-width pass: shuffle by the literal bucket id
+       (bucket i -> partition i), intra-bucket ``row_number`` + bucket
+       base. Each output partition is one contiguous seq run, the
+       precondition ``rebatch`` relies on.
 
     Multi-key orders stay scalable when the FIRST key is numeric,
     timestamp, or date (temporal keys bucket through an
@@ -186,8 +188,12 @@ def add_seq_scalable(
     ) if bases else F.lit(start)
     # Pass 3: the one full-width pass — shuffle on the literal bucket
     # id, then bucket-local numbering (identical pids in every pass).
-    parts = df.withColumn("_pid", pid_expr).repartition(
-        max(len(bounds) + 1, 1), F.col("_pid")
+    # The bucket id IS the partition id: hashing it would stack
+    # several buckets on one task (4 buckets hash to 2 partitions, one
+    # holding 3/4 of the rows) and leave each partition several seq
+    # runs instead of one.
+    parts = df.withColumn("_pid", pid_expr).repartitionById(
+        len(bounds) + 1, "_pid"
     )
     w = Window.partitionBy("_pid").orderBy(*key_cols)
     out = parts.withColumn(

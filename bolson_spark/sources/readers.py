@@ -63,11 +63,17 @@ def read_json_lines_stream(
 
 def read_socket_stream(spark: SparkSession, host: str, port: int) -> DataFrame:
     """The literal TCP analog of the reference's illex client
-    (stream.cpp:127): one line per JSON document over a socket."""
+    (stream.cpp:127): one line per JSON document over a socket.
+
+    One partition per micro-batch: Spark's socket source otherwise
+    deals a batch's lines round-robin over ``defaultParallelism``
+    partitions, and ``run_stream_convert`` numbers seqs in partition
+    order — one partition keeps seq order equal to arrival order."""
     return (
         spark.readStream.format("socket")
         .option("host", host)
         .option("port", port)
+        .option("numPartitions", 1)
         .load()
     )
 

@@ -83,6 +83,23 @@ def test_cli_ingest_near_dup_across_runs(spark, tmp_path, capsys):
     assert got == {1, 2, 5}
 
 
+def test_cli_bench_convert_runs_operators_convert(spark, capsys):
+    """`bench convert` times operators.convert itself with the given
+    parser, seq mode and message caps: every document lands in one
+    message, and the messages are full (exact: one seq run; scalable:
+    at most one partial message per literal bucket)."""
+    for seq_mode, parser in (("exact", "catalyst"), ("scalable", "arrow")):
+        argv = [
+            "bench", "convert", "--num-jsons", "500", "--max-rows", "64",
+            "--partitions", "3", "--seq-mode", seq_mode, "--parser", parser,
+        ]
+        assert main(argv) == 0
+        out = _out_line(capsys)
+        assert out["num_jsons"] == 500 and out["ipc_mb"] > 0
+        slack = 0 if seq_mode == "exact" else spark.sparkContext.defaultParallelism
+        assert 8 <= out["num_ipc"] <= 8 + slack, (seq_mode, out)
+
+
 def test_cli_bench_stream_latency_percentiles(spark, capsys):
     """`bench stream` drives paced bursts through the live socket path
     and reports per-stage + end-to-end p50/p99 — every burst must

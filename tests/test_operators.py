@@ -31,13 +31,29 @@ from bolson_spark.schemas import (
 # --- P1 parse -------------------------------------------------------------
 
 
+def _battery_doc(rng):
+    return {"voltage": [rng.randint(0, 2047) for _ in range(rng.randint(1, 16))]}
+
+
+def _trip_doc(rng):
+    d = {}
+    for f in TRIP_SPARK.fields:
+        n = TRIP_FIXED_LIST_SIZES.get(f.name)
+        if n is not None:
+            d[f.name] = [rng.randint(1, 99) for _ in range(n)]
+        elif f.dataType.typeName() == "boolean":
+            d[f.name] = rng.random() < 0.5
+        elif f.name == "timestamp":
+            d[f.name] = f"2005-09-{rng.randint(10, 28)} 11:59:06"
+        else:
+            d[f.name] = rng.randint(1, 99)
+    return d
+
+
 def test_parse_battery_schema(spark):
     """FNC02: one row per JSON; battery list field parsed losslessly."""
     rng = random.Random(0)
-    docs = [
-        {"voltage": [rng.randint(0, 2047) for _ in range(rng.randint(1, 16))]}
-        for _ in range(100)
-    ]
+    docs = [_battery_doc(rng) for _ in range(100)]
     df = spark.createDataFrame([(json.dumps(d),) for d in docs], ["value"])
     out = parse_json(df, BATTERY_SPARK, "value").collect()
     assert len(out) == len(docs)  # FNC02
@@ -49,22 +65,7 @@ def test_parse_battery_schema(spark):
 def test_parse_trip_schema_and_fixed_list_sizes(spark):
     """FNC04/05/07: trip types; fixed_size_list lengths enforced in test."""
     rng = random.Random(1)
-
-    def trip():
-        d = {}
-        for f in TRIP_SPARK.fields:
-            n = TRIP_FIXED_LIST_SIZES.get(f.name)
-            if n is not None:
-                d[f.name] = [rng.randint(1, 99) for _ in range(n)]
-            elif f.dataType.typeName() == "boolean":
-                d[f.name] = rng.random() < 0.5
-            elif f.name == "timestamp":
-                d[f.name] = "2005-09-09 11:59:06"
-            else:
-                d[f.name] = rng.randint(1, 99)
-        return d
-
-    docs = [trip() for _ in range(20)]
+    docs = [_trip_doc(rng) for _ in range(20)]
     df = spark.createDataFrame([(json.dumps(d),) for d in docs], ["value"])
     out = parse_json(df, TRIP_SPARK, "value")
     # timestamp stays a string (FNC05)
@@ -96,24 +97,43 @@ def test_parse_failfast_on_malformed(spark):
         parse_json(df, EVENT_PROPS_SPARK, "value", strict=False).collect()
 
 
-def test_parse_dual_execution_equal(spark):
+@pytest.mark.parametrize(
+    "schema,make_doc",
+    [(BATTERY_SPARK, _battery_doc), (TRIP_SPARK, _trip_doc)],
+    ids=["battery", "trip"],
+)
+def test_parse_dual_execution_equal(spark, schema, make_doc):
     """P1 dual execution: the Catalyst from_json impl and the Arrow C++
     JSON TableReader impl (parse/arrow.cpp:72-93) produce identical
     results — the reference's CPU-vs-FPGA differential pattern
-    (test/bolson/convert/test_opae_battery.cpp:73-88)."""
+    (test/bolson/convert/test_opae_battery.cpp:73-88). Trip covers the
+    timestamp string, booleans and fixed-size lists."""
     rng = random.Random(7)
-    docs = [
-        {"voltage": [rng.randint(0, 2047) for _ in range(rng.randint(1, 16))]}
-        for _ in range(500)
-    ]
+    docs = [make_doc(rng) for _ in range(500)]
     df = spark.createDataFrame(
         [(i, json.dumps(d)) for i, d in enumerate(docs)], ["doc_id", "value"]
     ).repartition(4)
-    a = parse_json(df, BATTERY_SPARK, "value", strict=True, keep=["doc_id"])
-    b = parse_json_arrow(df, BATTERY_SPARK, "value", strict=True, keep=["doc_id"])
-    ra = sorted((r.doc_id, tuple(r.voltage)) for r in a.collect())
-    rb = sorted((r.doc_id, tuple(r.voltage)) for r in b.collect())
+    a = parse_json(df, schema, "value", strict=True, keep=["doc_id"])
+    b = parse_json_arrow(df, schema, "value", strict=True, keep=["doc_id"])
+    assert a.schema.simpleString() == b.schema.simpleString()
+    ra = sorted(a.collect(), key=lambda r: r.doc_id)
+    rb = sorted(b.collect(), key=lambda r: r.doc_id)
     assert ra == rb
+    assert [r.asDict() for r in ra] == [
+        {"doc_id": i, **d} for i, d in enumerate(docs)
+    ]
+
+
+def test_parse_rejects_null_document(spark):
+    """A NULL document is not a JSON object: both strict parsers raise,
+    as they do for a blank one, so the convert default (arrow) and the
+    catalyst twin agree."""
+    df = spark.createDataFrame(
+        [('{"k": 1}',), (None,)], "value string"
+    ).coalesce(1)
+    for parse in (parse_json, parse_json_arrow):
+        with pytest.raises(Exception, match="null"):
+            parse(df, EVENT_PROPS_SPARK, "value").collect()
 
 
 def test_parse_arrow_strict_and_malformed(spark):
@@ -298,6 +318,31 @@ def test_ipc_size_cap_errors_not_splits(spark):
     )
     with pytest.raises(Exception, match="IPC message size"):
         serialize_ipc(df, max_rows=2000, max_ipc_size=1000).collect()
+
+
+def test_convert_payload_is_seq_plus_schema_fields(spark):
+    """The IPC payload carries bolson_seq + the schema fields only —
+    the reference's output schema (parse/arrow.cpp:147-163), no order
+    key, no batch_id; the unserialized frame keeps batch_id."""
+    import pyarrow as pa
+
+    from bolson_spark.operators import convert
+
+    rng = random.Random(3)
+    raw = spark.createDataFrame(
+        [(i, json.dumps(_trip_doc(rng))) for i in range(300)],
+        ["arrival", "value"],
+    )
+    for seq_mode in ("exact", "scalable"):
+        msgs = convert(
+            raw, TRIP_SPARK, "value", "arrival", serialize=True,
+            seq_mode=seq_mode, max_rows=128,
+        ).collect()
+        assert sum(m.num_rows for m in msgs) == 300
+        for m in msgs:
+            names = pa.ipc.open_stream(m.payload).schema.names
+            assert names == ["bolson_seq", *TRIP_SPARK.names], seq_mode
+    assert "batch_id" in convert(raw, TRIP_SPARK, "value", "arrival").columns
 
 
 # --- skew utilities -------------------------------------------------------
@@ -487,9 +532,10 @@ def test_add_seq_scalable_timestamp_key_stays_scalable(spark):
     out = add_seq_scalable(df, "ts", num_buckets=3)
     assert {(r.ts, r.bolson_seq) for r in out.collect()} == a
     # scale-path evidence: the one full-width pass shuffles on the
-    # literal bucket id, not a global single-partition sort
+    # literal bucket id (bucket i -> partition i), not a global
+    # single-partition sort
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(_pid" in plan
+    assert "direct_shuffle_partition_id(_pid" in plan
 
 
 def test_serialize_ipc_rejects_missing_seq_column(spark):

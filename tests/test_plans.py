@@ -4,11 +4,16 @@ TakeOrdered (not a global sort), shuffle-free rebatch arithmetic."""
 
 from __future__ import annotations
 
+import json
+import re
+
 from pyspark.sql import functions as F
 
-from bolson_spark.operators.rebatch import add_batch_id
+from bolson_spark.operators import convert
+from bolson_spark.operators.rebatch import add_batch_id, rebatch
 from bolson_spark.plans import assert_pushdown, formatted_plan, plan_has
 from bolson_spark.queries import QUERIES
+from bolson_spark.schemas import BATTERY_SPARK
 
 SF = "/root/testdata/sf0.001"
 
@@ -40,8 +45,81 @@ def test_topk_is_take_ordered_not_global_sort(spark):
 
 
 def test_rebatch_is_shuffle_free(spark):
-    df = add_batch_id(spark.range(10_000).withColumnRenamed("id", "bolson_seq"))
-    assert "Exchange" not in formatted_plan(df)
+    seqd = spark.range(10_000).withColumnRenamed("id", "bolson_seq")
+    assert "Exchange" not in formatted_plan(add_batch_id(seqd))
+    assert "Exchange" not in formatted_plan(rebatch(seqd))
+
+
+def _battery_raw(spark, n=200):
+    return spark.createDataFrame(
+        [(i, json.dumps({"voltage": [i % 2048]})) for i in range(n)],
+        ["arrival", "value"],
+    )
+
+
+def _exchange_args(plan: str) -> list[str]:
+    """The Arguments line of every Exchange node of a formatted plan."""
+    return [
+        seg.split("Arguments: ")[-1]
+        for seg in plan.split("\n\n")
+        if re.match(r"\(\d+\) Exchange\b", seg)
+    ]
+
+
+def test_convert_exact_plan_has_one_exchange(spark):
+    """Parsed rows cross exactly one exchange: the exact window's
+    single-partition sort. rebatch adds no range repartition."""
+    out = convert(
+        _battery_raw(spark), BATTERY_SPARK, "value", "arrival", serialize=True
+    )
+    plan = formatted_plan(out)
+    exchanges = _exchange_args(plan)
+    assert len(exchanges) == 1 and "SinglePartition" in exchanges[0], plan
+    assert "rangepartitioning" not in plan, plan
+
+
+def test_convert_scalable_plan_parses_after_its_one_exchange(spark):
+    """The scalable path shuffles the raw (key, document) rows once, by
+    literal bucket id, and runs the opaque Arrow parse inside the bucket
+    tasks — above the exchange, so the key-only bounds and counts passes
+    never re-run it."""
+    out = convert(
+        _battery_raw(spark),
+        BATTERY_SPARK,
+        "value",
+        "arrival",
+        serialize=True,
+        seq_mode="scalable",
+    )
+    plan = formatted_plan(out)
+    exchanges = _exchange_args(plan)
+    assert len(exchanges) == 1, plan
+    assert "direct_shuffle_partition_id(_pid" in exchanges[0], plan
+    tree = plan.split("\n\n")[0].splitlines()  # root first
+    exchange_at = next(i for i, ln in enumerate(tree) if "Exchange" in ln)
+    arrow_at = [i for i, ln in enumerate(tree) if "MapInArrow" in ln]
+    # parse + serialize, both above the exchange
+    assert len(arrow_at) == 2 and max(arrow_at) < exchange_at, plan
+
+
+def test_convert_exact_job_budget(spark):
+    """An exact convert of a cached input runs at most 2 jobs: the
+    window's shuffle-map stage and the result stage (no range-sampling
+    job, no second exchange)."""
+    raw = _battery_raw(spark, 5000).cache()
+    raw.count()
+    sc = spark.sparkContext
+    group = "test-convert-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        convert(
+            raw, BATTERY_SPARK, "value", "arrival", serialize=True
+        ).write.mode("overwrite").format("noop").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        raw.unpersist()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, jobs
 
 
 def test_semi_anti_joins_compile_to_joins(spark):
@@ -550,7 +628,7 @@ def test_training_order_uses_scalable_seq_buckets(spark):
     a single-reducer global window — the plan-hygiene sweep already
     rejects SinglePartition; this pins the positive shape."""
     plan = formatted_plan(QUERIES["training_order"].fn(spark, SF))
-    assert "hashpartitioning(_pid" in plan, plan
+    assert "direct_shuffle_partition_id(_pid" in plan, plan
 
 
 def test_ivf_pq_knn_is_take_ordered(spark):
@@ -798,8 +876,8 @@ def test_cm_frequency_probe_joins_broadcast_grid(spark):
 
 def test_balanced_shards_uses_scalable_seq_not_global_sort(spark):
     """Shard assignment must ride the bucket-partitioned scalable seq
-    (hashpartitioning on the literal bucket id), never a
+    (partitioned by the literal bucket id), never a
     range-partitioned global sort or single-reducer window."""
     plan = formatted_plan(QUERIES["balanced_shards"].fn(spark, SF))
-    assert "hashpartitioning(_pid" in plan, plan
+    assert "direct_shuffle_partition_id(_pid" in plan, plan
     assert "rangepartitioning" not in plan, plan

@@ -3,11 +3,12 @@ the Spark analog of the reference's seeded randomized generation
 (SURVEY.md §5.3: GenerateJSONs with schema min/max metadata, seed 0).
 
 Invariants asserted for ARBITRARY inputs, not just the fixture corpus:
-- FNC02: one output row per input JSON, across parse → seq → rebatch →
-  serialize → deserialize.
+- FNC02: one output row per input JSON, across ``convert`` (parse →
+  seq → rebatch → serialize, both seq modes) → deserialize.
 - FNC03: information equality after the full IPC roundtrip.
 - Envelope: every IPC message holds <= max_rows rows; per-message seq
-  ranges are contiguous, non-overlapping, and cover exactly [0, n).
+  ranges are contiguous, non-overlapping, and cover exactly [0, n);
+  messages are full except at Arrow batch boundaries.
 """
 
 from __future__ import annotations
@@ -18,12 +19,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from bolson_spark.operators import (
-    add_seq,
-    deserialize_ipc,
-    parse_json,
-    serialize_ipc,
-)
+from bolson_spark.operators import convert, deserialize_ipc
 from bolson_spark.schemas import BATTERY_SPARK
 
 # battery docs per the reference's generator metadata:
@@ -48,15 +44,20 @@ def test_convert_roundtrip_property(spark, docs, max_rows):
     df = spark.createDataFrame(
         [(i, json.dumps({"voltage": v})) for i, v in enumerate(docs)],
         ["arrival", "value"],
+    ).repartition(2)
+    for seq_mode in ("exact", "scalable"):
+        _check_convert_roundtrip(spark, df, docs, max_rows, seq_mode)
+
+
+def _check_convert_roundtrip(spark, df, docs, max_rows, seq_mode):
+    ser = (
+        convert(
+            df, BATTERY_SPARK, "value", "arrival",
+            max_rows=max_rows, serialize=True, seq_mode=seq_mode,
+        )
+        .withColumn("part", F.spark_partition_id())
+        .cache()
     )
-    parsed = parse_json(df, BATTERY_SPARK, "value", keep=["arrival"])
-    seqd = (
-        add_seq(parsed, "arrival")
-        .drop("arrival")
-        .repartitionByRange(2, F.col("bolson_seq"))
-        .sortWithinPartitions("bolson_seq")
-    )
-    ser = serialize_ipc(seqd, max_rows=max_rows).cache()
     msgs = ser.collect()
     n = len(docs)
     # envelope invariants
@@ -67,6 +68,18 @@ def test_convert_roundtrip_property(spark, docs, max_rows):
     assert spans[0][0] == 0 and spans[-1][1] == n - 1
     for (_, a1), (b0, _) in zip(spans, spans[1:]):
         assert b0 == a1 + 1
+    # message fullness: only a max_rows cut or an Arrow batch boundary
+    # ends a message early, so a lost seq order (many short runs) fails
+    # here instead of silently publishing tiny messages
+    # (serialize is a narrow map: a message's partition is its rows')
+    per_batch = int(
+        spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    )
+    part_rows: dict[int, int] = {}
+    for m in msgs:
+        part_rows[m.part] = part_rows.get(m.part, 0) + m.num_rows
+    arrow_batches = sum(-(-r // per_batch) for r in part_rows.values())
+    assert len(msgs) <= -(-n // max_rows) + arrow_batches, seq_mode
     # FNC03 information equality through the full roundtrip
     back = deserialize_ipc(
         ser, "bolson_seq bigint, voltage array<bigint>"

@@ -642,7 +642,8 @@ def test_stream_convert_over_tcp_socket(spark, tmp_path):
     """The literal S1 interface: line-framed JSON over a TCP socket
     (stream.cpp:127-161). A server thread plays the reference's JSON
     producer; the socket-source query converts until all documents have
-    drained, then stops — received == published, seq contiguous."""
+    drained, then stops — received == published, seq contiguous, and
+    the rows in seq order are the documents in send order."""
     import socket
     import threading
     import time
@@ -696,10 +697,10 @@ def test_stream_convert_over_tcp_socket(spark, tmp_path):
     back = deserialize_ipc(
         msgs, "bolson_seq bigint, voltage array<bigint>"
     ).collect()
-    assert sorted(r.bolson_seq for r in back) == list(range(len(docs)))
-    assert sorted(tuple(r.voltage) for r in back) == sorted(
-        tuple(d["voltage"]) for d in docs
-    )
+    back.sort(key=lambda r: r.bolson_seq)
+    assert [r.bolson_seq for r in back] == list(range(len(docs)))
+    # one TCP stream is a total order: seq order == send order
+    assert [list(r.voltage) for r in back] == [d["voltage"] for d in docs]
 
 
 try:
